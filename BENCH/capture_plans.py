@@ -6,8 +6,8 @@ properties that matter at 100 TB:
   - segment scan: PartitionFilters on term_bucket + PushedFilters on
     term (partition pruning + rowgroup pushdown)
   - forward-table resolve: PushedFilters on doc_ord, broadcast join
-  - build tf agg: partial_count before the exchange (map-side combine)
-  - WholeStageCodegen spans on the JVM-side stages
+  - build exchange: the pack kernel's varint runs are the only thing
+    exchanged (map-side combine, no explode)
 """
 
 from __future__ import annotations
@@ -84,25 +84,6 @@ def main():
                    "PartitionFilters" in p and "doc_block" in p.split(
                        "PartitionFilters", 1)[1][:200]))
 
-    # 3. tf aggregation plan (map-side partial agg + codegen)
-    src = spark.createDataFrame(make_transcripts(500))
-    from sparkbm25.build import assign_doc_ords, term_bucket_col
-
-    df_tok = assign_doc_ords(src, cfg)
-    tf = (
-        df_tok.select("doc_ord", "dl", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_ord")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), 16))
-    )
-    p = explain_str(tf)
-    sections.append(("tf aggregation (A8)", p))
-    checks.append(("tf agg: partial aggregate before exchange",
-                   "partial_count" in p or "HashAggregate" in p))
-    # formatted AQE plans mark codegen nodes with a '* ' prefix
-    checks.append(("tf agg: whole-stage codegen spans present",
-                   "WholeStageCodegen" in p or "\n+- * " in p or ":- * " in p or "- * " in p))
-
     # 4. broadcast join in query path (query terms onto segments)
     qdf = spark.createDataFrame(
         pd.DataFrame({"term": terms, "qtf": [1, 1]}), schema="term string, qtf int")
@@ -146,34 +127,18 @@ def main():
     checks.append(("ann top-k: TakeOrderedAndProject (no global sort exchange)",
                    "TakeOrderedAndProject" in p))
 
-    # 6. lean build shuffle: the exchanged row carries ONLY
-    #    (term, doc_ord, dl[, pos]) — salt is a hash expression, bucket
-    #    recomputed post-shuffle; shuffle bytes are the build's
-    #    bandwidth ceiling
-    occ = df_tok.select(
-        "doc_ord", F.col("dl").cast("int").alias("dl"),
-        F.explode("tokens").alias("term"))
-    salt_expr = F.least(F.lit(7), F.floor(F.col("doc_ord") * 8 / 500)).cast("int")
-    lean = (occ.select("term", "doc_ord", "dl")
-            .repartition(32, F.col("term"), salt_expr)
-            .sortWithinPartitions("term", "doc_ord"))
-    p = explain_str(lean)
-    sections.append(("Lean build shuffle (term,doc_ord,dl only)", p))
-    checks.append(("lean shuffle: hash exchange present, no term_bucket/salt "
-                   "columns materialized",
-                   "hashpartitioning" in p and "term_bucket" not in p))
+    # 6. packed build exchange (the one build path): the pack
+    #    kernel's mapInArrow output is the ONLY thing exchanged — one
+    #    row per (term, salt, input partition) with a varint runs blob
+    #    — and the reduce side is a partition-local sort + mapInArrow
+    #    merge; no explode, no occurrence rows through the shuffle
+    from sparkbm25.build import (_make_pack_kernel, assign_doc_ords,
+                                 packed_schema)
 
-    # 6b. packed build exchange (round 5 default): the pack kernel's
-    #     mapInArrow output is the ONLY thing exchanged — one row per
-    #     (term, salt, input partition) with a varint runs blob — and
-    #     the reduce side is a partition-local sort + mapInArrow merge;
-    #     no explode, no occurrence rows through the shuffle
-    from sparkbm25.build import _make_pack_kernel
-
+    df_tok = assign_doc_ords(spark.createDataFrame(make_transcripts(500)), cfg)
     pack = _make_pack_kernel(4, 0, 500, False)
     packed = df_tok.select("doc_ord", "tokens").mapInArrow(
-        pack, schema="term string, salt int, min_doc bigint, "
-                     "n_runs bigint, runs binary")
+        pack, schema=packed_schema(False))
     sp = (packed.repartition(32, "term", "salt")
           .sortWithinPartitions("term", "salt", "min_doc"))
     p = explain_str(sp)

@@ -2,7 +2,7 @@
 """Same-JVM A/B for input_order='verify' (skip the stage-1 full-text
 range shuffle; prove sortedness instead): alternating builds on the
 bench input (sorted, non-overlapping cached parquet files), packed
-encoder on both arms.
+runs on both arms.
 
 Usage: python BENCH/r5/inorder_ab.py [reps] [cpus]
 Writes BENCH/r5/inorder_ab.json.
@@ -55,7 +55,7 @@ def main():
         cfg = IndexConfig(n_term_buckets=32, n_salt_buckets=8,
                           n_build_chunks=1, n_doc_partitions=max(cpus, 8),
                           checkpoint_runs=False, build_terms_dict=False,
-                          encoder="packed", input_order=order)
+                          input_order=order)
         idx = os.path.join(shm, "idx")
         shutil.rmtree(idx, ignore_errors=True)
         t0 = time.time()

@@ -51,8 +51,7 @@ spark = b.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 cfg = IndexConfig(n_term_buckets=32, n_salt_buckets=8, n_build_chunks=1,
                   n_doc_partitions=max(cpus, 8), checkpoint_runs=False,
-                  build_terms_dict=False, encoder="packed",
-                  input_order="verify")
+                  build_terms_dict=False, input_order="verify")
 t = spark.read.parquet(input_path)
 times, loads = [], []
 for rep in range(3):

@@ -55,7 +55,6 @@ def main():
     cfg = IndexConfig(n_term_buckets=32, n_salt_buckets=8, n_build_chunks=1,
                       n_doc_partitions=max(cpus, 8),
                       checkpoint_runs=False, build_terms_dict=False,
-                      encoder=os.environ.get("SPARK_GRAFT_ENCODER", "packed"),
                       input_order=os.environ.get("SPARK_GRAFT_INPUT_ORDER",
                                                  "verify"))
     idx = os.path.join(shm, f"idx_{cpus}")

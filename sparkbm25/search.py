@@ -30,7 +30,6 @@ Ranking contract (parity with refscore.bm25_reference_topk):
 from __future__ import annotations
 
 import heapq
-import json
 import os
 from collections import Counter
 
@@ -51,9 +50,8 @@ def _load_stats(index_dir: str) -> tuple[int, float, IndexConfig, list[dict]]:
     incrementally-built index) + per-generation info for WAND
     upper-bound correction."""
     stats = catalog.global_stats(index_dir)
-    cfg = (IndexConfig.from_json(stats["config"])
-           if isinstance(stats["config"], str)
-           else IndexConfig(**json.loads(stats["config"])))
+    # from_json drops config keys that older indexes carry
+    cfg = IndexConfig.from_json(stats["config"])
     return int(stats["n_docs"]), float(stats["avgdl"]), cfg, stats["generations"]
 
 

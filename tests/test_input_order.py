@@ -5,14 +5,16 @@ is already (conv_id, turn_idx)-sorted — but PROVES it: the tokenize
 kernel checks within-partition order as it streams, the bookkeeping
 job returns per-partition key bounds, and the driver rejects any
 overlap before assigning offsets in key order. Segments must come out
-byte-identical to the 'shuffle' path; violations must raise, never
-silently misnumber docIDs.
+byte-identical to the 'shuffle' path and to the numpy reference builder
+(tests/segref.py); violations must raise, never silently misnumber
+docIDs.
 """
 
 import os
 
 import pytest
 
+from segref import assert_segments_equal, reference_segments
 from sparkbm25 import IndexConfig, build_index
 from sparkbm25.fixtures import make_transcripts
 
@@ -60,13 +62,9 @@ def test_verify_equals_shuffle_on_sorted_parquet(spark, corpus,
     idx_b = os.path.join(root, "idx_verify")
     build_index(spark, sdf, idx_a, _cfg(input_order="shuffle"))
     build_index(spark, sdf, idx_b, _cfg(input_order="verify"))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    ref = reference_segments(corpus, _cfg())
+    assert_segments_equal(_segments(spark, idx_a), ref)
+    assert_segments_equal(_segments(spark, idx_b), ref)
 
 
 def test_verify_raises_on_unsorted_partition(spark, corpus,
@@ -104,25 +102,16 @@ def test_verify_raises_on_overlapping_partitions(spark, corpus,
 
 
 def test_verify_with_packed_encoder(spark, corpus, tmp_path_factory):
-    """The two round-5 build optimizations compose: verified sorted
-    input (no text shuffle) + packed encoder (no occurrence shuffle) —
-    the whole build's only exchange is the varint-packed runs."""
+    """Verified sorted input (no text shuffle) composes with the packed
+    runs (no occurrence shuffle) — the whole build's only exchange is
+    the varint-packed runs."""
     root = str(tmp_path_factory.mktemp("inorder_packed"))
     sorted_pdf = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     sdf = spark.createDataFrame(sorted_pdf).coalesce(3)
-    idx_a = os.path.join(root, "a")
-    idx_b = os.path.join(root, "b")
-    build_index(spark, spark.createDataFrame(corpus), idx_a,
-                _cfg(input_order="shuffle", encoder="stream"))
-    build_index(spark, sdf, idx_b,
-                _cfg(input_order="verify", encoder="packed"))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    idx = os.path.join(root, "b")
+    build_index(spark, sdf, idx, _cfg(input_order="verify"))
+    assert_segments_equal(_segments(spark, idx),
+                          reference_segments(corpus, _cfg()))
 
 
 def test_verify_multi_file_partitions(spark, corpus, tmp_path_factory):
@@ -153,13 +142,9 @@ def test_verify_multi_file_partitions(spark, corpus, tmp_path_factory):
     build_index(spark, spark.read.parquet(src), idx_a,
                 _cfg(input_order="shuffle"))
     build_index(spark, sdf, idx_b, _cfg(input_order="verify"))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    ref = reference_segments(corpus, _cfg())
+    assert_segments_equal(_segments(spark, idx_a), ref)
+    assert_segments_equal(_segments(spark, idx_b), ref)
 
 
 def test_verify_raises_on_file_unsorted_inside_packed_partition(
@@ -189,14 +174,14 @@ def test_verify_raises_on_file_unsorted_inside_packed_partition(
 @pytest.mark.parametrize("store_positions", [False, True])
 def test_verify_multi_file_partitions_packed_encoder(
         spark, corpus, tmp_path_factory, store_positions):
-    """encoder='packed' under verify-mode bin-packed partitions
+    """The pack kernel under verify-mode bin-packed partitions
     (final-round review finding): the pack kernel assumed partitions
     are doc_ord-ascending, but verify mode only guarantees that WITHIN
     each file run — size-ordered bin-packing makes doc_ord jump down
     at file boundaries, which silently produced negative run deltas
     (uint64 wrap) and unsorted block docs. The kernel must detect the
     non-monotonic partition and lexsort (term code, doc); segments
-    must stay byte-identical to the shuffle+stream arm, positions
+    must stay byte-identical to the numpy reference, positions
     included."""
     root = str(tmp_path_factory.mktemp(
         f"inorder_packed_{int(store_positions)}"))
@@ -205,8 +190,8 @@ def test_verify_multi_file_partitions_packed_encoder(
     import pyarrow as pa
     import pyarrow.parquet as pq
     s = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    # same size-skewed contiguous slices as the stream-encoder pack
-    # test: packing order != key order
+    # same size-skewed contiguous slices as the multi-file test
+    # above: packing order != key order
     cuts = [0, 1200, 1350, 2100, 2250, 2900, len(s)]
     for i in range(6):
         part = s.iloc[cuts[i]:cuts[i + 1]]
@@ -214,18 +199,8 @@ def test_verify_multi_file_partitions_packed_encoder(
                        os.path.join(src, f"part-{i:04d}.parquet"))
     sdf = spark.read.parquet(src).coalesce(2)
     assert sdf.rdd.getNumPartitions() == 2  # >1 file per partition
-    idx_a = os.path.join(root, "a")
-    idx_b = os.path.join(root, "b")
-    build_index(spark, spark.read.parquet(src), idx_a,
-                _cfg(input_order="shuffle", encoder="stream",
-                     store_positions=store_positions))
-    build_index(spark, sdf, idx_b,
-                _cfg(input_order="verify", encoder="packed",
-                     store_positions=store_positions))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    idx = os.path.join(root, "b")
+    cfg = _cfg(input_order="verify", store_positions=store_positions)
+    build_index(spark, sdf, idx, cfg)
+    assert_segments_equal(_segments(spark, idx),
+                          reference_segments(corpus, cfg))

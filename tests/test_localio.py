@@ -36,8 +36,7 @@ def built(spark, tmp_path_factory):
     # store_positions=True so the phrase case also exercises the pos
     # blob field through the pyarrow block read
     build_index(spark, sdf, index_dir,
-                IndexConfig(store_positions=True, encoder="packed",
-                            checkpoint_runs=False),
+                IndexConfig(store_positions=True, checkpoint_runs=False),
                 input_desc="lio")
     return index_dir
 

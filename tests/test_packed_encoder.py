@@ -1,21 +1,27 @@
-"""encoder='packed' (round 5): map-side SPIMI combine.
+"""The one segment build path: map-side SPIMI combine.
 
-The packed path shuffles one varint row per (term, salt, input
-partition) instead of one row per token occurrence, then merge-
-concatenates on the reduce side (input-partition doc ranges are
-disjoint and min_doc-ordered). The contract: segments come out
-BYTE-IDENTICAL to the 'stream' path — same groups, same blocks, same
-varint payloads, same per-block max_impact — with and without the
-positions stream, so every downstream consumer (search, compaction,
-annotate, terms dict) is automatically covered by the existing suite.
+The build shuffles one varint row per (term, salt, input partition)
+instead of one row per token occurrence, then merge-concatenates on
+the reduce side (input-partition doc ranges are disjoint and
+min_doc-ordered). The contract: segments come out BYTE-IDENTICAL to
+the pure-numpy reference builder (tests/segref.py) — same groups, same
+blocks, same varint payloads, same per-block max_impact — with and
+without the positions stream, whether the packed runs stream straight
+into the merge or go through the on-disk checkpoint, so every
+downstream consumer (search, compaction, annotate, terms dict) is
+automatically covered by the existing suite.
 """
 
+import json
 import os
 import shutil
 
+import pandas as pd
 import pytest
 
-from sparkbm25 import IndexConfig, Searcher, build_index
+from segref import assert_segments_equal, read_segments, reference_segments
+from sparkbm25 import IndexConfig, Searcher, bm25_reference_topk, build_index
+from sparkbm25.catalog import read_stats, stats_path
 from sparkbm25.fixtures import make_queries, make_transcripts
 
 N_TURNS = 3000
@@ -26,61 +32,68 @@ def corpus():
     return make_transcripts(N_TURNS)
 
 
-def _build(spark, corpus, root, encoder, store_positions):
-    idx = os.path.join(root, f"idx_{encoder}_{int(store_positions)}")
+def _cfg(**kw):
+    base = dict(n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
+                n_doc_partitions=4, checkpoint_runs=False,
+                build_terms_dict=False)
+    base.update(kw)
+    return IndexConfig(**base)
+
+
+def _build(spark, corpus, root, store_positions, **kw):
+    idx = os.path.join(root, f"idx_{int(store_positions)}")
     shutil.rmtree(idx, ignore_errors=True)
-    cfg = IndexConfig(
-        n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
-        n_doc_partitions=4, checkpoint_runs=False, build_terms_dict=False,
-        encoder=encoder, store_positions=store_positions,
-    )
+    cfg = _cfg(store_positions=store_positions, **kw)
     res = build_index(spark, spark.createDataFrame(corpus), idx, cfg)
     assert res.n_docs == N_TURNS
     return idx
-
-
-def _read_segments(spark, idx):
-    df = (
-        spark.read.parquet(os.path.join(idx, "segments"))
-        .toPandas()
-        .sort_values(["term", "salt"])
-        .reset_index(drop=True)
-    )
-    return df
 
 
 @pytest.mark.parametrize("store_positions", [False, True])
 def test_packed_segments_byte_identical(spark, corpus, tmp_path_factory,
                                         store_positions):
     root = str(tmp_path_factory.mktemp("packed_parity"))
-    a = _read_segments(spark, _build(spark, corpus, root, "stream",
-                                     store_positions))
-    b = _read_segments(spark, _build(spark, corpus, root, "packed",
-                                     store_positions))
-    assert len(a) == len(b)
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        ba, bb = a["blocks"].iloc[i], b["blocks"].iloc[i]
-        assert len(ba) == len(bb), a["term"].iloc[i]
-        for x, y in zip(ba, bb):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    idx = _build(spark, corpus, root, store_positions)
+    assert_segments_equal(
+        read_segments(spark, idx),
+        reference_segments(corpus, _cfg(store_positions=store_positions)))
+
+
+@pytest.mark.parametrize("input_order", ["shuffle", "verify"])
+@pytest.mark.parametrize("store_positions", [False, True])
+def test_checkpointed_segments_byte_identical(spark, corpus, tmp_path,
+                                              input_order, store_positions):
+    """checkpoint_runs=True writes the packed runs partitioned by
+    term_bucket and merges them back chunk by chunk (3 chunks over 8
+    buckets): the segments must equal the reference exactly like the
+    direct build's, positions included, for both input orders."""
+    cfg = _cfg(checkpoint_runs=True, n_build_chunks=3,
+               store_positions=store_positions, input_order=input_order)
+    sorted_pdf = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    sdf = (spark.createDataFrame(sorted_pdf).coalesce(3)
+           if input_order == "verify" else spark.createDataFrame(corpus))
+    idx = str(tmp_path / "idx")
+    build_index(spark, sdf, idx, cfg)
+    runs = spark.read.parquet(os.path.join(idx, "tf"))
+    assert "min_doc" in runs.columns and "runs" in runs.columns
+    assert_segments_equal(read_segments(spark, idx),
+                          reference_segments(corpus, cfg))
 
 
 def test_packed_index_searchable(spark, corpus, tmp_path_factory):
     """End-to-end: a packed-built index answers the fixed query set
-    identically to a stream-built one on both engine paths."""
+    rank-identically to the numpy BM25 reference scorer on the driver."""
     root = str(tmp_path_factory.mktemp("packed_search"))
-    idx_s = _build(spark, corpus, root, "stream", False)
-    idx_p = _build(spark, corpus, root, "packed", False)
+    idx = _build(spark, corpus, root, False)
     queries = make_queries()
-    s_s, s_p = Searcher(spark, idx_s), Searcher(spark, idx_p)
-    for q in queries["query_text"]:
-        exp = s_s.search(q, k=10)
-        got = s_p.search(q, k=10)
+    exp = bm25_reference_topk(corpus, queries, k=10)
+    s = Searcher(spark, idx)
+    for q in queries.itertuples(index=False):
+        got = s.search(q.query_text, k=10)
+        eq = exp[exp["query_id"] == q.query_id].reset_index(drop=True)
         for col in ("rank", "conv_id", "turn_idx"):
-            assert exp[col].tolist() == got[col].tolist(), (q, col)
-        assert len(exp) == 0 or (exp["score"] - got["score"]).abs().max() < 1e-12
+            assert got[col].tolist() == eq[col].tolist(), (q.query_text, col)
+        assert len(eq) == 0 or (eq["score"] - got["score"]).abs().max() < 1e-9
 
 
 def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory):
@@ -89,8 +102,6 @@ def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory):
     a single hot term repeated many times in one doc (tf run-length),
     unicode terms (dictionary-encode + crc32 bucketing on non-ASCII),
     and a one-doc tail partition."""
-    import pandas as pd
-
     texts = (
         [None, "", "   ", "!!!"]
         + ["spark " * 50]                      # tf=50 in one doc
@@ -105,42 +116,29 @@ def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory):
         "text": texts,
         "tool": [None] * len(texts),
     })
-    root = str(tmp_path_factory.mktemp("packed_edge"))
-    segs = {}
-    for enc in ("stream", "packed"):
-        idx = os.path.join(root, enc)
-        cfg = IndexConfig(n_term_buckets=4, n_salt_buckets=3,
-                          n_build_chunks=1, n_doc_partitions=5,
-                          checkpoint_runs=False, build_terms_dict=False,
-                          encoder=enc, store_positions=True)
-        res = build_index(spark, spark.createDataFrame(pdf), idx, cfg)
-        assert res.n_docs == len(texts)  # empties stay in the forward table
-        segs[enc] = _read_segments(spark, idx)
-    a, b = segs["stream"], segs["packed"]
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    idx = str(tmp_path_factory.mktemp("packed_edge") / "idx")
+    cfg = _cfg(n_term_buckets=4, n_salt_buckets=3, n_doc_partitions=5,
+               store_positions=True)
+    res = build_index(spark, spark.createDataFrame(pdf), idx, cfg)
+    assert res.n_docs == len(texts)  # empties stay in the forward table
+    got = read_segments(spark, idx)
+    assert_segments_equal(got, reference_segments(pdf, cfg))
     # the tf=50 run survived run-length counting
-    spk = a[a["term"] == "spark"]
+    spk = got[got["term"] == "spark"]
     assert int(spk["n_docs"].sum()) >= 1
 
 
 def test_packed_incremental_append_and_compact(spark, corpus,
                                                tmp_path_factory):
-    """The packed encoder through the generational pipeline: two
-    update_index appends (disjoint doc_ord_base ranges exercise the
-    pack kernel's absolute-first-doc encoding at a nonzero base) plus
-    an auto-compact fold must answer queries identically to a one-shot
-    stream build over the full corpus."""
+    """The build through the generational pipeline: two update_index
+    appends (disjoint doc_ord_base ranges exercise the pack kernel's
+    absolute-first-doc encoding at a nonzero base) plus an auto-compact
+    fold must answer queries identically to a one-shot build over the
+    full corpus."""
     from sparkbm25.streaming import update_index
 
     root = str(tmp_path_factory.mktemp("packed_gen") / "idx")
-    cfg = IndexConfig(n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
-                      n_doc_partitions=4, checkpoint_runs=False,
-                      build_terms_dict=False, encoder="packed")
+    cfg = _cfg()
     half = N_TURNS // 2
     update_index(spark, spark.createDataFrame(corpus.iloc[:half]), root, cfg)
     res = update_index(spark, spark.createDataFrame(corpus.iloc[half:]),
@@ -148,8 +146,7 @@ def test_packed_incremental_append_and_compact(spark, corpus,
     assert res.n_docs == N_TURNS - half
 
     one_shot = _build(spark, corpus,
-                      str(tmp_path_factory.mktemp("packed_gen_ref")),
-                      "stream", False)
+                      str(tmp_path_factory.mktemp("packed_gen_ref")), False)
     s_gen, s_ref = Searcher(spark, root), Searcher(spark, one_shot)
     for q in make_queries()["query_text"]:
         got, exp = s_gen.search(q, k=10), s_ref.search(q, k=10)
@@ -157,9 +154,37 @@ def test_packed_incremental_append_and_compact(spark, corpus,
         assert len(exp) == 0 or (exp["score"] - got["score"]).abs().max() < 1e-9
 
 
-def test_packed_rejects_checkpoint_runs(spark, corpus, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("packed_cfg"))
-    cfg = IndexConfig(encoder="packed", checkpoint_runs=True)
-    with pytest.raises(ValueError, match="packed"):
-        build_index(spark, spark.createDataFrame(corpus.head(50)),
-                    os.path.join(root, "idx"), cfg)
+def test_old_index_stats_still_open(spark, corpus, tmp_path):
+    """Indexes written before the build had one encoder carry
+    encoder='stream' and two dictionary-encoding keys in their stats
+    JSON. The segment format never depended on them: such an index
+    must answer identically and still compact."""
+    from sparkbm25.streaming import compact_generations, update_index
+
+    root = str(tmp_path / "idx")
+    cfg = _cfg(store_positions=True)
+    half = N_TURNS // 2
+    update_index(spark, spark.createDataFrame(corpus.iloc[:half]), root, cfg)
+    update_index(spark, spark.createDataFrame(corpus.iloc[half:]), root, cfg)
+    queries = list(make_queries()["query_text"]) + ['"w0001 w0002"']
+    before = {q: Searcher(spark, root).search(q, k=10) for q in queries}
+
+    gens = sorted(d for d in os.listdir(root) if d.startswith("gen="))
+    assert len(gens) == 2
+    for g in gens:
+        stats = read_stats(os.path.join(root, g))
+        old = json.loads(stats["config"])
+        old.update(encoder="stream", dict_terms="off", dict_max_vocab=4_000_000)
+        stats["config"] = json.dumps(old, sort_keys=True)
+        with open(stats_path(os.path.join(root, g)), "w") as f:
+            json.dump(stats, f, sort_keys=True)
+
+    s = Searcher(spark, root)
+    for q in queries:
+        pd.testing.assert_frame_equal(s.search(q, k=10), before[q])
+    res = compact_generations(spark, root)
+    assert res is not None and res.n_docs == N_TURNS
+    s = Searcher(spark, root)
+    for q in queries:
+        got = s.search(q, k=10)
+        assert got["conv_id"].tolist() == before[q]["conv_id"].tolist(), q

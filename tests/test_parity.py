@@ -70,11 +70,11 @@ def test_driver_parity(spark, corpus, queries, built, mode, algo):
 
 
 def test_streamlined_config_parity(spark, corpus, queries, tmp_path):
-    """The bench configuration (no runs checkpoint, occurrence-stream
-    encoder — tf computed as run-lengths inside the sorted shuffle)
-    must be rank-identical too."""
+    """The bench configuration (no runs checkpoint: the packed runs
+    stream straight into the segment merge) must be rank-identical
+    too."""
     cfg = IndexConfig(n_build_chunks=1, checkpoint_runs=False,
-                      build_terms_dict=False, encoder="stream")
+                      build_terms_dict=False)
     d = str(tmp_path / "fastidx")
     sdf = spark.createDataFrame(corpus)
     res = build_index(spark, sdf, d, cfg, input_desc="fast")
@@ -102,16 +102,3 @@ def test_text_equality_invariant(spark, corpus, built):
     natural = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
     assert natural["doc_ord"].is_monotonic_increasing
     assert pdf["doc_ord"].tolist() == list(range(len(pdf)))
-
-
-def test_dict_encoded_build_parity(spark, corpus, queries, tmp_path):
-    """dict_terms='auto' (int64-id shuffle + post-encode string join)
-    must produce an index that answers identically."""
-    d = str(tmp_path / "dictidx")
-    build_index(spark, spark.createDataFrame(corpus), d,
-                IndexConfig(dict_terms="auto", checkpoint_runs=False,
-                            n_build_chunks=1),
-                input_desc="dict4k")
-    exp = bm25_reference_topk(corpus, queries, k=10, mode="or")
-    got = search_batch(spark, d, queries, k=10, mode="or").toPandas()
-    _assert_parity(got, exp)

@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from segref import assert_segments_equal, read_segments
 from sparkbm25 import IndexConfig, build_index, search_batch
 from sparkbm25.catalog import read_manifest, segments_chunk_dir
 from sparkbm25.fixtures import make_queries, make_transcripts
@@ -28,8 +29,12 @@ def _segments_pdf(spark, index_dir):
     )
 
 
-def test_resume_after_partial_build(spark, corpus_df, tmp_path):
-    cfg = IndexConfig(n_build_chunks=4)
+@pytest.mark.parametrize("store_positions", [False, True])
+def test_resume_after_partial_build(spark, corpus_df, tmp_path,
+                                    store_positions):
+    """The checkpoint is the packed SPIMI runs (partitioned by
+    term_bucket); positions ride them, so they resume too."""
+    cfg = IndexConfig(n_build_chunks=4, store_positions=store_positions)
     clean_dir = str(tmp_path / "clean")
     crash_dir = str(tmp_path / "crashed")
 
@@ -62,6 +67,9 @@ def test_resume_after_partial_build(spark, corpus_df, tmp_path):
     got = _segments_pdf(spark, crash_dir)
     exp = _segments_pdf(spark, clean_dir)
     pd.testing.assert_frame_equal(got.reset_index(drop=True), exp.reset_index(drop=True))
+    # block payloads too, the positions stream included
+    assert_segments_equal(read_segments(spark, crash_dir),
+                          read_segments(spark, clean_dir))
 
     # and the resumed index answers queries identically
     q = make_queries()
